@@ -7,9 +7,14 @@ feature (``cli.py:65-85``). Here the Feature is assembled from the decoded
 columns by a single Arrow-batched pandas UDF over a NARROW struct projection
 (the polymorphic ``result.value`` — number | code struct | flag struct —
 rules out a pure ``F.to_json`` schema), producing one ``geojson`` string
-column. A sink-only operator: at 100 TB you write the columnar feature
-table and serialize to GeoJSON only at export boundaries, partitioned
-by ``cell_prefix`` instead of the reference's file-per-feature.
+column. The two blocks the feature table does not carry verbatim are
+rebuilt here: ``hasProvenance`` from the row's PROV columns
+(``_prov_block``), and ``additionalProperties`` as the ``metadata_json``
+dict with ``BUFRheaders`` parsed from ``headers_json`` (once per report
+within a batch) appended as the last key. A sink-only operator: at 100 TB
+you write the columnar feature table and serialize to GeoJSON only at
+export boundaries, partitioned by ``cell_prefix`` instead of the
+reference's file-per-feature.
 """
 
 from __future__ import annotations
@@ -23,13 +28,15 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 CONFORMS_TO = ["https://wis.wmo.int/spec/wccdm-obs/1/conf/observation"]
+ENGINE_VERSION_LABEL = "0.7.dev0"  # matches the reference prov label contract
 
 _NEEDED = [
     "feature_id", "report_id", "index", "geometry", "host", "wsi",
     "observation_type", "observed_property", "observing_procedure",
     "phenomenon_time", "result_time", "result_value", "result_code",
     "result_flags", "result_units", "quality_flag", "report_type",
-    "metadata_json", "prov_json",
+    "headers_json", "metadata_json", "prov_source", "subset_index",
+    "message_number", "prov_end_time",
 ]
 
 
@@ -40,8 +47,48 @@ def _nn(v):
     return v
 
 
-def _feature_dict(r: dict) -> dict:
-    """One WCCDM-OBS Feature from a decoded row (reference :1123-1172)."""
+def _prov_block(source_identifier, feature_id, inner_id, subset_idx, msg_idx,
+                prov_end_time) -> dict:
+    # reference :1262-1294, wall clock injected
+    return {
+        "prefix": {"prov": "http://www.w3.org/ns/prov#",
+                   "schema": "https://schema.org/"},
+        "entity": {
+            f"{source_identifier}": {
+                "prov:type": "schema:DigitalDocument",
+                "prov:label": "Input data file",
+                "schema:encodingFormat": "application/bufr",
+            },
+            f"{feature_id}": {
+                "prov:type": "observation",
+                "prov:label": f"Observation {inner_id} from subset "
+                              f"{subset_idx} of message {msg_idx}",
+            },
+        },
+        "wasDerivedFrom": {
+            "_:wdf": {
+                "prov:generatedEntity": f"{feature_id}",
+                "prov:usedEntity": f"{source_identifier}",
+                "prov:activity": "_:bufr2geojson",
+            }
+        },
+        "activity": {
+            "_:bufr2geojson": {
+                "prov:type": "prov:Activity",
+                "prov:label": f"Data transformation using version "
+                              f"{ENGINE_VERSION_LABEL} of bufr2geojson",
+                "prov:endTime": prov_end_time,
+            }
+        },
+    }
+
+
+def _feature_dict(r: dict, headers: dict) -> dict:
+    """One WCCDM-OBS Feature from a decoded row (reference :1123-1172).
+
+    ``headers`` memoizes parsed ``headers_json`` values across the rows of
+    one batch (all features of a report share one); the parsed dict is
+    shared between Features, never mutated."""
     geom = _nn(r.get("geometry"))
     geometry = (
         {"type": geom["type"], "coordinates": list(geom["coordinates"])}
@@ -59,6 +106,21 @@ def _feature_dict(r: dict) -> dict:
                      "description": list(flags["description"])
                      if flags["description"] is not None else None}
     qf = r.get("quality_flag") or {}
+    prov = None
+    if _nn(r.get("prov_end_time")) is not None:
+        prov = _prov_block(r["prov_source"], r["feature_id"], int(r["index"]),
+                           int(r["subset_index"]), int(r["message_number"]),
+                           r["prov_end_time"])
+    metadata = None
+    if r.get("metadata_json"):
+        metadata = json.loads(r["metadata_json"])
+        hj = r.get("headers_json")
+        if hj:
+            hdr = headers.get(hj)
+            if hdr is None:
+                hdr = headers[hj] = json.loads(hj)
+            # reference key order: BUFRheaders is the last key
+            metadata["BUFRheaders"] = hdr
     return {
         "id": r["feature_id"],
         "conformsTo": list(CONFORMS_TO),
@@ -86,16 +148,14 @@ def _feature_dict(r: dict) -> dict:
                 }
             ],
             "parameter": {
-                "hasProvenance": json.loads(r["prov_json"])
-                if r.get("prov_json") else None,
+                "hasProvenance": prov,
                 "status": None,
                 "version": 0,
                 "comment": None,
                 "reportType": r["report_type"],
                 "reportIdentifier": r["report_id"],
                 "isMemberOf": None,
-                "additionalProperties": json.loads(r["metadata_json"])
-                if r.get("metadata_json") else None,
+                "additionalProperties": metadata,
             },
             "featureOfInterest": [
                 {"id": None, "label": None, "relation": None}
@@ -112,8 +172,9 @@ def geojson_col(packed: Column) -> Column:
     def _ser(s: pd.DataFrame) -> pd.Series:
         # a StructType argument arrives as a pandas DataFrame (one column
         # per field); nested structs inside arrive as dicts
+        headers = {}
         return pd.Series(
-            [json.dumps(_feature_dict(r), separators=(",", ":"))
+            [json.dumps(_feature_dict(r, headers), separators=(",", ":"))
              for r in s.to_dict("records")]
         )
 

@@ -38,9 +38,11 @@ Reference behaviors reproduced exactly (file:line cites into
   phenomenonTime string (:543-549) — both quirks preserved;
 * WSI/TSI precedence chain with guessed issuers 20000/20002/20004
   (:651-780); statistic-qualified property rename (:1117-1121);
-* id prefixing ``{report_md5}-{index}`` (:1234-1239, :1261) and the W3C PROV
-  block with injectable wall-clock fields (:1262-1294; the reference test
-  itself normalizes them, tests/test_bufr2geojson.py:261-262);
+* id prefixing ``{report_md5}-{index}`` (:1234-1239, :1261); the W3C PROV
+  block (:1262-1294) is assembled at the GeoJSON sink from the narrow
+  ``prov_*``/``subset_index``/``message_number`` columns decode emits, with
+  its wall-clock field injectable (the reference test itself normalizes it,
+  tests/test_bufr2geojson.py:261-262);
 * per-document error containment → quarantine ``error`` column instead of
   executor-killing exceptions (R27; reference logs & yields {} at
   :1213-1218, :1299-1300). NOTE the span-text contract: element fields are
@@ -74,8 +76,6 @@ from bufr2geojson_spark.functions.wmo_tables import (
     PREFERRED_UNITS,
 )
 from bufr2geojson_spark.schemas import feature_schema
-
-ENGINE_VERSION_LABEL = "0.7.dev0"  # matches the reference prov label contract
 
 OM = "http://www.opengis.net/def/observationType/OGC-OM/2.0/OM_Measurement"
 # (the reference emits these two with a missing colon — "http//" — at
@@ -610,84 +610,6 @@ def _quality_flag(af_sig, af_value) -> dict:
             "flagValue": fv}
 
 
-def _prov_block(source_identifier, feature_id, inner_id, subset_idx, msg_idx,
-                prov_end_time) -> dict:
-    # reference :1262-1294, wall clock injected
-    return {
-        "prefix": {"prov": "http://www.w3.org/ns/prov#",
-                   "schema": "https://schema.org/"},
-        "entity": {
-            f"{source_identifier}": {
-                "prov:type": "schema:DigitalDocument",
-                "prov:label": "Input data file",
-                "schema:encodingFormat": "application/bufr",
-            },
-            f"{feature_id}": {
-                "prov:type": "observation",
-                "prov:label": f"Observation {inner_id} from subset "
-                              f"{subset_idx} of message {msg_idx}",
-            },
-        },
-        "wasDerivedFrom": {
-            "_:wdf": {
-                "prov:generatedEntity": f"{feature_id}",
-                "prov:usedEntity": f"{source_identifier}",
-                "prov:activity": "_:bufr2geojson",
-            }
-        },
-        "activity": {
-            "_:bufr2geojson": {
-                "prov:type": "prov:Activity",
-                "prov:label": f"Data transformation using version "
-                              f"{ENGINE_VERSION_LABEL} of bufr2geojson",
-                "prov:endTime": prov_end_time,
-            }
-        },
-    }
-
-
-# printable ASCII with no '"' or '\' — strings json.dumps quotes verbatim
-# (ensure_ascii leaves this range untouched), so '"'+s+'"' is byte-identical
-_JSON_VERBATIM = re.compile(r'[ !#-\[\]-~]*\Z')
-
-
-def _quote_json(s: str) -> str:
-    """Byte-identical fast path for ``json.dumps(str)``: plain-ASCII ids
-    (md5-hex feature ids, filenames) skip the C encoder; anything needing
-    escaping falls back to it. Profiling: the two per-feature dumps calls
-    in _prov_json were ~2/3 of remaining json CPU in the fold."""
-    if _JSON_VERBATIM.match(s):
-        return '"' + s + '"'
-    return json.dumps(s)
-
-
-def _prov_json(source_identifier, feature_id, inner_id, subset_idx, msg_idx,
-               pet_json: str) -> str:
-    """Byte-identical fast path for ``json.dumps(_prov_block(...))`` —
-    string-template assembly with per-scalar escaping (profiling: the full
-    nested-dict dumps per feature was ~10% of decode CPU). Equality with
-    the dict form is pinned by a regression test."""
-    s = _quote_json(f"{source_identifier}")
-    f = _quote_json(f"{feature_id}")
-    return (
-        '{"prefix": {"prov": "http://www.w3.org/ns/prov#", '
-        '"schema": "https://schema.org/"}, "entity": {'
-        + s + ': {"prov:type": "schema:DigitalDocument", '
-        '"prov:label": "Input data file", '
-        '"schema:encodingFormat": "application/bufr"}, '
-        + f + ': {"prov:type": "observation", '
-        f'"prov:label": "Observation {inner_id} from subset '
-        f'{subset_idx} of message {msg_idx}"}}}}, '
-        '"wasDerivedFrom": {"_:wdf": {"prov:generatedEntity": '
-        + f + ', "prov:usedEntity": ' + s
-        + ', "prov:activity": "_:bufr2geojson"}}, '
-        '"activity": {"_:bufr2geojson": {"prov:type": "prov:Activity", '
-        '"prov:label": "Data transformation using version '
-        f'{ENGINE_VERSION_LABEL} of bufr2geojson", '
-        '"prov:endTime": ' + pet_json + "}}}"
-    )
-
-
 def _report_id(spans) -> str:
     """Deterministic report id when the ingest did not carry the original
     BUFR md5 (reference md5s the re-encoded subset bytes, :1234-1239; our
@@ -817,10 +739,9 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
     msg_idx = int(raw_headers.get("messageNumber", 1))
     report_type = (f"{headers['dataCategory']:03}"
                    f"{headers['internationalDataSubCategory']:03}")
-    # serialized once per document; per-feature metadata_json splices this
-    # fragment instead of re-serializing the 23 header keys per feature
+    # serialized once per subset and carried as-is by every feature of the
+    # report; the GeoJSON sink appends it to additionalProperties
     headers_json = json.dumps(headers)
-    pet_json = json.dumps(f"{prov_end_time}")
 
     state = _DocState()
     last_key = None
@@ -974,9 +895,6 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
         feature_id = f"{report_id}-{index}"
 
         this_src = src_id if src_id not in ("", None) else host_id
-        prov_json = _prov_json(this_src, feature_id, index, subset_idx,
-                               msg_idx, pet_json)
-
         is_num = isinstance(value, (int, float))
         row = {
             "feature_id": feature_id,
@@ -1006,11 +924,11 @@ def _decode_subset(doc_id, spans, full_spans, *, guess_wsi, result_time,
             "bufr_element": fxxyyy,
             "zcoord": zcoord,
             "headers_json": headers_json,
-            # metadata keeps reference key order (BUFRheaders last) but the
-            # header fragment is spliced in pre-serialized
-            "metadata_json": metadata_frag
-            + ',"BUFRheaders":' + headers_json + "}",
-            "prov_json": prov_json,
+            "metadata_json": metadata_frag + "}",
+            "prov_source": this_src,
+            "subset_index": subset_idx,
+            "message_number": msg_idx,
+            "prov_end_time": prov_end_time,
             "error": None,
             "n_media_spans": n_media,
         }
@@ -1053,7 +971,7 @@ def decode_documents(
     (tests/test_bufr2geojson.py:261-262).
     """
     schema = feature_schema(include_spans)
-    pet = prov_end_time if prov_end_time is not None else result_time
+    pet = f"{prov_end_time if prov_end_time is not None else result_time}"
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in schema.fields]

@@ -316,7 +316,8 @@ def knn_join(
     Termination is exact: rings expand until ≥k candidates are held AND the
     nearest possible point of the next unexplored ring (great-circle lower
     bound) exceeds the current k-th best distance. ``knn_ring`` reports the
-    last ring searched — the skew diagnostic the lineage records pick up.
+    last ring searched — a per-feature skew diagnostic column. Lineage
+    records do not aggregate it; only the feature table carries it.
 
     Narrow operator: the station grid rides in the closure; no shuffle, and
     (like ``pip_join``) only (lat, lon) enters Python — the result comes back

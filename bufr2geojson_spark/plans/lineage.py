@@ -6,13 +6,19 @@ range, row counts, checksums) to enable checkpoint-resume mid-job."
 Design: each pipeline stage materializes to parquet; lineage is computed on
 the *materialized* output (a re-read), so partition ids and checksums
 describe exactly the bytes a resumed run will consume. The checksum is an
-order-insensitive 64-bit content fingerprint — SUM of ``xxhash64`` over the
-row struct, all JVM-side (one tiny shuffle of pre-aggregated partials; the
-analogue at 100 TB costs one integer per input partition). BIT_XOR of
-``xxhash64`` over the row struct is the fingerprint — commutative and
-overflow-free under ANSI mode. A stage is
-"complete" iff its parquet ``_SUCCESS`` marker AND its lineage table exist —
-resume skips complete stages and re-reads their output.
+order-insensitive 64-bit content fingerprint: BIT_XOR of ``xxhash64`` over
+the row struct, all JVM-side (one tiny shuffle of pre-aggregated partials;
+the analogue at 100 TB costs one integer per input partition) —
+commutative and overflow-free under ANSI mode.
+
+Every lineage row also carries the run ``fingerprint`` of the stage: a hash
+of what the stage's output is a function of (input snapshot, the config it
+and its upstream stages read, engine version; see
+``plans.pipeline.stage_fingerprint``). A stage is "complete" iff its
+parquet ``_SUCCESS`` marker AND its lineage table exist AND every lineage
+row carries the caller's fingerprint — resume skips complete stages and
+re-reads their output; a stage left by another snapshot, config or engine
+is recomputed.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ def lineage_of(
     snapshot_id: int,
     cell_col: str | None = None,
     wall_ms: int = 0,
+    fingerprint: str | None = None,
 ) -> DataFrame:
     """One lineage row per physical partition of ``df``."""
     hashable = [
@@ -66,6 +73,7 @@ def lineage_of(
             "row_count",
             "checksum",
             F.lit(wall_ms).cast("long").alias("wall_ms"),
+            F.lit(fingerprint).cast("string").alias("fingerprint"),
         )
     )
 
@@ -78,11 +86,19 @@ def stage_paths(work_dir: str, run_id: str, stage: str) -> tuple[str, str]:
 
 
 def stage_complete(spark: SparkSession, work_dir: str, run_id: str,
-                   stage: str) -> bool:
+                   stage: str, fingerprint: str) -> bool:
+    """True iff the stage's output and lineage were committed and every
+    lineage row carries ``fingerprint`` (lineage written before
+    fingerprints existed never matches)."""
     out, lin = stage_paths(work_dir, run_id, stage)
-    return fs_exists(spark, f"{out}/_SUCCESS") and fs_exists(
-        spark, f"{lin}/_SUCCESS"
-    )
+    if not (fs_exists(spark, f"{out}/_SUCCESS")
+            and fs_exists(spark, f"{lin}/_SUCCESS")):
+        return False
+    lineage = spark.read.parquet(lin)
+    if "fingerprint" not in lineage.columns:
+        return False
+    found = lineage.select("fingerprint").distinct().collect()
+    return [r.fingerprint for r in found] == [fingerprint]
 
 
 def write_stage(
@@ -94,6 +110,7 @@ def write_stage(
     snapshot_id: int,
     cell_col: str | None = None,
     partition_by: str | None = None,
+    fingerprint: str | None = None,
 ) -> DataFrame:
     """Materialize a stage + its lineage; returns the re-read output (so the
     downstream plan cuts here — the checkpoint boundary)."""
@@ -106,7 +123,8 @@ def write_stage(
     wall_ms = int((time.monotonic() - t0) * 1000)
     materialized = spark.read.parquet(out)
     lineage_of(
-        materialized, run_id, stage, snapshot_id, cell_col, wall_ms
+        materialized, run_id, stage, snapshot_id, cell_col, wall_ms,
+        fingerprint,
     ).write.mode("overwrite").parquet(lin)
     return materialized
 
@@ -118,4 +136,7 @@ def read_stage(spark: SparkSession, work_dir: str, run_id: str,
 
 
 def read_lineage(spark: SparkSession, work_dir: str, run_id: str) -> DataFrame:
-    return spark.read.parquet(f"{work_dir}/{run_id}/_lineage/*")
+    # stages of one run may have been written by engines before and after
+    # the fingerprint column existed
+    return spark.read.option("mergeSchema", "true").parquet(
+        f"{work_dir}/{run_id}/_lineage/*")

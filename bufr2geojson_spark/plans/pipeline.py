@@ -10,11 +10,14 @@ Stage graph (each stage materializes with per-partition lineage → resumable):
 
 Launched via ``spark-submit --py-files`` (see jobs/pipeline.py) per the
 north rule. A resumed run (same work_dir + run_id) skips every stage whose
-output + lineage already exist — the checkpoint-resume contract (N10).
+output + lineage already exist and were written for the same
+``stage_fingerprint`` — the checkpoint-resume contract (N10).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import warnings
 from dataclasses import dataclass, field
 
@@ -29,6 +32,10 @@ from bufr2geojson_spark.operators.tiles import (
     tile_rollup,
 )
 from bufr2geojson_spark.plans import lineage as L
+from bufr2geojson_spark.schemas import FEATURE_SCHEMA
+
+#: bump when a stage's output changes for the same input and config
+PIPELINE_ENGINE_VERSION = 2
 
 
 @dataclass
@@ -55,6 +62,39 @@ class PipelineConfig:
     # is maximum throughput (at 100 TB each extra checkpoint is a full
     # table write+read). Lineage rows exist for every checkpointed stage.
     checkpoint_stages: tuple = ("D", "T", "J", "A", "W")
+
+
+#: PipelineConfig fields each stage reads. ``stages``, ``checkpoint_stages``
+#: and ``output_partitions`` change where and how output is laid out, not
+#: what it holds, so no fingerprint covers them.
+_STAGE_FIELDS = {
+    "D": ("guess_wsi", "result_time"),
+    "T": ("s2_level", "hex_res", "prefix_bits"),
+    "J": ("pip_enabled", "knn_enabled", "knn_k", "knn_grid_deg"),
+    "A": ("salt_buckets", "hot_threshold", "rollup_levels"),
+    "W": (),
+}
+#: each stage and the stages upstream of it
+_UPSTREAM = {"D": "D", "T": "DT", "J": "DTJ", "A": "DTJA", "W": "DTJW"}
+
+
+def stage_fingerprint(conf: PipelineConfig, stage: str,
+                      snapshot_id: int) -> str:
+    """Hash of everything ``stage``'s output is a function of: the input
+    snapshot, the config fields of the stage and of every upstream stage
+    that runs, and the engine and feature-schema version. The stations and
+    polygons dimension tables are not covered."""
+    upstream = [s for s in _UPSTREAM[stage] if s in conf.stages]
+    payload = {
+        "snapshot_id": snapshot_id,
+        "stages": upstream,
+        "config": {f: getattr(conf, f) for s in upstream
+                   for f in _STAGE_FIELDS[s]},
+        "engine": PIPELINE_ENGINE_VERSION,
+        "feature_schema": FEATURE_SCHEMA.simpleString(),
+    }
+    blob = json.dumps(payload, sort_keys=True, default=str).encode()
+    return hashlib.sha256(blob).hexdigest()[:16]
 
 
 @dataclass
@@ -102,12 +142,14 @@ def run_pipeline(
             res.executed.append(f"{stage}~fused")
             materialized = False
             return compute()
-        if resume and L.stage_complete(spark, work_dir, run_id, stage):
+        fp = stage_fingerprint(conf, stage, snapshot_id)
+        if resume and L.stage_complete(spark, work_dir, run_id, stage, fp):
             res.skipped.append(stage)
             materialized = True  # parquet read-back needs no fused-chain cache
             return L.read_stage(spark, work_dir, run_id, stage)
         out = L.write_stage(
-            compute(), spark, work_dir, run_id, stage, snapshot_id, **wkw
+            compute(), spark, work_dir, run_id, stage, snapshot_id,
+            fingerprint=fp, **wkw
         )
         res.executed.append(stage)
         materialized = True

@@ -9,6 +9,9 @@ The decoded-feature shape mirrors the reference's WCCDM-OBS GeoJSON Feature
 (assembled at ``bufr2geojson/__init__.py:1123-1172``) flattened into typed
 columns; the deeply-nested ``additionalProperties`` block rides as a JSON
 string column (``metadata_json``) because its keys are data-dependent.
+Report-level and template bytes are stored once: the BUFR headers only in
+``headers_json``, and the PROV block not at all — the GeoJSON sink rebuilds
+both from the row (``functions/geojson.py``).
 """
 
 from __future__ import annotations
@@ -118,9 +121,20 @@ def feature_schema(include_spans: bool = False) -> StructType:
         StructField("report_type", StringType()),
         StructField("bufr_element", StringType()),
         StructField("zcoord", ZCOORD_SCHEMA),
+        # json.dumps of the 22 header keys + sequence; one value per report
+        # (dictionary-encoded by parquet), the only carrier of BUFRheaders
         StructField("headers_json", StringType()),
+        # per-feature additionalProperties WITHOUT BUFRheaders: qualifier
+        # groups, BUFR_element, zCoordinate; the sink appends the headers
         StructField("metadata_json", StringType()),
-        StructField("prov_json", StringType()),
+        # PROV inputs not otherwise in the row (feature_id and index are):
+        # the used entity (header sourceIdentifier, else the decode
+        # source_identifier, else the host), 0-based subset, 1-based message
+        # number, and the injected end time (constant per decode call)
+        StructField("prov_source", StringType()),
+        StructField("subset_index", LongType()),
+        StructField("message_number", LongType()),
+        StructField("prov_end_time", StringType()),
         StructField("error", StringType()),
         StructField("n_media_spans", IntegerType()),
     ]
@@ -184,5 +198,7 @@ LINEAGE_SCHEMA = StructType(
         StructField("row_count", LongType()),
         StructField("checksum", StringType()),
         StructField("wall_ms", LongType()),
+        # plans.pipeline.stage_fingerprint: snapshot + config + engine
+        StructField("fingerprint", StringType()),
     ]
 )

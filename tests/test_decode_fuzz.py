@@ -81,14 +81,3 @@ def test_garbage_after_valid_header_contained(prefix, suffix):
     spans += [dict(s) | {"offset": len(spans) + i + 1}
               for i, s in enumerate(suffix)]
     _decode_never_raises("fuzz-multi", spans)
-
-
-@settings(max_examples=400, deadline=None)
-@given(st.text(max_size=40))
-def test_quote_json_fast_path_byte_identical(s):
-    """_quote_json (the PROV serializer's string fast path) must be
-    byte-identical to json.dumps for ANY string — safe-ASCII strings take
-    the verbatim path, everything else must fall back to the C encoder."""
-    from bufr2geojson_spark.operators.decode import _quote_json
-
-    assert _quote_json(s) == json.dumps(s)

@@ -7,7 +7,12 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from bufr2geojson_spark.plans.pipeline import PipelineConfig, run_pipeline
+from bufr2geojson_spark.operators.decode import decode_documents
+from bufr2geojson_spark.plans.pipeline import (
+    PipelineConfig,
+    run_pipeline,
+    stage_fingerprint,
+)
 from bufr2geojson_spark.plans import lineage as L
 from bufr2geojson_spark.sources.io import read_snapshot, snapshot_id_for
 from bufr2geojson_spark.sources.synth import (
@@ -204,6 +209,89 @@ def test_missing_final_write_warns(spark, dims, workdir):
             resume=False, conf=conf,
         )
     assert any("final" in str(c.message).lower() for c in caught)
+
+
+def test_resume_recomputes_stages_of_another_snapshot(spark, dims, workdir):
+    """A resumed run must not reuse stages computed from another input
+    snapshot or config: 40 docs at snapshot 1, then 400 docs at snapshot 2
+    with s2_level=10 under the same run_id recomputes D and T."""
+    stations, polygons = dims
+    conf1 = PipelineConfig(**{**_conf().__dict__, "stages": ("D", "T")})
+    first = run_pipeline(
+        spark, synth_documents(spark, 40, n_stations=N_ST, partitions=2),
+        stations, polygons, workdir, "stale", snapshot_id=1, resume=True,
+        conf=conf1,
+    )
+    assert first.executed == ["D", "T"]
+
+    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
+    conf2 = PipelineConfig(**{**conf1.__dict__, "s2_level": 10})
+    second = run_pipeline(spark, docs, stations, polygons, workdir, "stale",
+                          snapshot_id=2, resume=True, conf=conf2)
+    assert second.skipped == []
+    assert second.executed == ["D", "T"]
+    lin = L.read_lineage(spark, workdir, "stale").collect()
+    assert {r.snapshot_id for r in lin} == {2}
+    expected = decode_documents(docs).filter("error is null").count()
+    assert second.features.count() == expected
+
+    # same snapshot, T's config changed: D is reused, T is recomputed
+    conf3 = PipelineConfig(**{**conf2.__dict__, "s2_level": 12})
+    third = run_pipeline(spark, docs, stations, polygons, workdir, "stale",
+                         snapshot_id=2, resume=True, conf=conf3)
+    assert third.skipped == ["D"]
+    assert third.executed == ["T"]
+
+
+def test_stage_fingerprint_covers_upstream_config_only():
+    base = _conf()
+    fp = {s: stage_fingerprint(base, s, 7) for s in "DTJAW"}
+    assert len(set(fp.values())) == 5
+
+    def changed(**kw):
+        conf = PipelineConfig(**{**base.__dict__, **kw})
+        return {s for s in "DTJAW" if stage_fingerprint(conf, s, 7) != fp[s]}
+
+    assert {s for s in "DTJAW"
+            if stage_fingerprint(base, s, 8) != fp[s]} == set("DTJAW")
+    assert changed(result_time="2025-01-01 00:00:00") == set("DTJAW")
+    assert changed(s2_level=10) == set("TJAW")
+    assert changed(knn_k=2) == set("JAW")
+    assert changed(salt_buckets=4) == {"A"}
+    # layout-only fields change no fingerprint
+    assert changed(output_partitions=3) == set()
+    assert changed(checkpoint_stages=("J", "A", "W")) == set()
+    assert changed(stages=("D", "T")) & {"D", "T"} == set()
+    # dropping J from the run changes what W is computed from
+    assert changed(stages=("D", "T", "W")) & {"D", "T", "W"} == {"W"}
+
+
+def test_feature_tables_carry_no_prov_or_header_copy(spark, dims, workdir):
+    """The J and W feature tables hold each report-level and template byte
+    once: no PROV string column, and no BUFRheaders copy inside
+    metadata_json (headers live only in headers_json)."""
+    stations, polygons = dims
+    docs = synth_documents(spark, N_DOCS, n_stations=N_ST, partitions=4)
+    run_pipeline(spark, docs, stations, polygons, workdir, "full",
+                 snapshot_id=123, resume=True, conf=_conf())
+    columns = [
+        "feature_id", "report_id", "doc_id", "index", "geometry", "lon", "lat",
+        "z", "wsi", "tsi", "host", "observed_property", "observation_type",
+        "observing_procedure", "phenomenon_time", "result_time",
+        "result_value", "result_code", "result_flags", "result_units",
+        "quality_flag", "report_type", "bufr_element", "zcoord",
+        "headers_json", "metadata_json", "prov_source", "subset_index",
+        "message_number", "prov_end_time", "error", "n_media_spans",
+        "cell_s2", "cell_h3", "cell_prefix", "region_id", "region_name",
+        "nearest_station_id", "nearest_station_km", "knn_ring", "knn",
+    ]
+    for stage in ("J", "W"):
+        table = L.read_stage(spark, workdir, "full", stage)
+        assert table.columns == columns, stage
+        assert "prov_json" not in table.columns
+        assert table.filter(
+            F.col("metadata_json").contains("BUFRheaders")).count() == 0
+        assert table.filter(F.col("headers_json").isNull()).count() == 0
 
 
 class TestIncrementalRead:
